@@ -263,6 +263,32 @@ def test_commit_metrics_in_lineage(spark, tmp_path, stream):
     assert m["keys_touched"] == winners.count()
 
 
+def test_replay_negative_lsns_matches_oracle(spark, tmp_path):
+    """LSNs -25..5 with batch_lsns=10: slice keys must floor, not truncate
+    toward zero — a truncated key puts lsn -25 in slice -2, whose filter
+    [-20, -10) then drops it.  A partial replay up to lsn -11 must leave
+    watermarks at -11 (not clamped up to -1), so the resume re-applies
+    every later event."""
+    rows = [(lsn, float(lsn), "upsert", "r", f"e{lsn}", "c", "py", f"v{lsn}")
+            for lsn in range(-25, -20)]  # keys only these events touch
+    for lsn in range(-20, 6):
+        op = "delete" if lsn % 6 == 0 else "upsert"
+        rows.append((lsn, float(lsn), op, "r", f"p{lsn % 4}", "c", "py", f"v{lsn}"))
+    events = spark.createDataFrame(
+        rows,
+        "lsn long, op_ts double, op string, repo string, path string, "
+        "`commit` string, lang string, content string",
+    )
+    lake = make_lake(spark, tmp_path, "neg")
+    replay(lake, events, batch_lsns=10, max_lsn=-11)
+    assert set(lake.watermarks().values()) == {-11}
+    resume_replay(lake, events, batch_lsns=10)
+
+    got = {tuple(r[k] for k in KEY_COLS): r["content"] for r in lake.read().collect()}
+    want = {k: row["content"] for k, row in oracle_replay(events.collect()).items()}
+    assert got == want
+
+
 def test_replay_file_packed_lsns_walks_only_occupied_slices(spark, tmp_path, stream):
     """Single-table replay over a file-packed LSN space (a `mysql-bin.000007`
     stream decoded by cdc/wal.py packs lsn ~ 7 * 2^40): the dense walk from

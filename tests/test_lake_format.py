@@ -758,12 +758,42 @@ def test_compact_if_needed_policy(spark, tmp_path):
             assert len(es) <= 2  # compacted buckets are tight again
 
 
-def test_cow_merge_does_not_resurrect_clean_bucket_tombstones(spark, tmp_path):
-    """Ghost-tombstone hazard on the MERGE path (compact()/read() already
-    guard it): a MoR delete of never-present keys into an EMPTY bucket
-    leaves a tombstone file in a CLEAN bucket; a later COW merge that
-    range-hits that file must not rewrite it through the data-schema read,
-    which would resurrect the tombstoned keys as null-payload rows."""
+def _ghost_rewrite(spark, lake, op):
+    """Run rewrite operation ``op`` over the ghost-tombstone fixture and
+    return the {(repo, path): content} state it must leave."""
+    g1 = spark.createDataFrame([(3, 3.0, "upsert", "r", "G1", "c", "py", "hello")], _COLS)
+    if op == "cow_apply_batch":
+        apply_batch(lake, g1, "cow-upsert", mode="cow")
+        return {("r", "G1"): "hello"}
+    if op == "compact":
+        lake.compact(min_files=1)
+    elif op == "delete_where":
+        # a resurrected ghost row has lang NULL, which never matches
+        lake.delete_where([("lang", "=", "py")])
+    elif op == "update_where":
+        lake.update_where([("lang", "=", "py")], {"content": "x"})
+    elif op == "merge_into":
+        (lake.merge_into(g1.select("repo", "path", "commit", "lang", "content"))
+             .when_matched_update({"content": F.col("s.content")})
+             .when_not_matched_insert()
+             .execute())
+        return {("r", "G1"): "hello"}
+    elif op == "rebucket":
+        lake.rebucket(2)
+    return {}
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["cow_apply_batch", "compact", "delete_where", "update_where", "merge_into", "rebucket"],
+)
+def test_cow_merge_does_not_resurrect_clean_bucket_tombstones(spark, tmp_path, op):
+    """Ghost-tombstone hazard on every rewrite path: a MoR delete of
+    never-present keys into an EMPTY bucket leaves a tombstone file in a
+    CLEAN bucket; a later rewrite (COW merge, compaction, predicate
+    delete/update, MERGE INTO, rebucket) must not read it through the
+    data schema, which would resurrect the tombstoned keys as null-payload
+    rows."""
     lake = LakeTable.create(str(tmp_path / "ghost"), spark, n_buckets=1)
     apply_batch(
         lake,
@@ -775,16 +805,9 @@ def test_cow_merge_does_not_resurrect_clean_bucket_tombstones(spark, tmp_path):
         "del-never-present", mode="mor",
     )
     assert not lake.metadata().get("dirty"), "empty-bucket tombstone stays clean"
-    apply_batch(
-        lake,
-        spark.createDataFrame(
-            [(3, 3.0, "upsert", "r", "G1", "c", "py", "hello")],
-            _COLS,
-        ),
-        "cow-upsert", mode="cow",
-    )
+    want = _ghost_rewrite(spark, lake, op)
     rows = {(r["repo"], r["path"]): r["content"] for r in lake.read().collect()}
-    assert rows == {("r", "G1"): "hello"}, f"G2 must NOT resurrect: {rows}"
+    assert rows == want, f"G2 must NOT resurrect after {op}: {rows}"
     assert lake.lookup([("r", "G2", "c")]).count() == 0
 
 

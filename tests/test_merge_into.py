@@ -242,3 +242,44 @@ def test_set_key_column_and_unknown_column_rejected(spark, tmp_path):
         lake.merge_into(src).when_matched_update({"nope": F.lit("x")}).execute()
     with pytest.raises(ValueError):
         lake.merge_into(src).execute()  # no clauses
+
+
+def test_rebase_validates_probed_buckets(spark, tmp_path, monkeypatch):
+    """A source key that matches nothing and writes nothing still PROBES
+    its bucket: a concurrent commit inserting that key before the MERGE
+    installs must force a body re-run, so the MERGE serializes after the
+    insert and its matched-update lands (no lost update)."""
+    lake = LakeTable.create(str(tmp_path / "probe"), spark, n_buckets=4)
+    other = LakeTable(lake.root, spark)
+    orig = LakeTable._try_install_snapshot
+    raced = []
+
+    def racing_install(self, meta):
+        if not raced and meta["lineage"][-1].get("mutation") == "merge_into":
+            raced.append(meta["version"])
+            other.merge_into(_src(spark, [("r", "K", "c", "py", "concurrent")])) \
+                .when_not_matched_insert().execute(batch_id="concurrent")
+        return orig(self, meta)
+
+    monkeypatch.setattr(LakeTable, "_try_install_snapshot", racing_install)
+    res = (
+        lake.merge_into(_src(spark, [("r", "K", "c", "py", "ignored")]))
+        .when_matched_update({"content": F.lit("updated")})
+        .execute(batch_id="probe")
+    )
+    monkeypatch.setattr(LakeTable, "_try_install_snapshot", orig)
+
+    assert raced, "the concurrent insert must land before the MERGE's first install"
+    assert res["rows_updated"] == 1
+    assert _state(lake) == {("r", "K", "c"): ("py", "updated")}
+
+
+def test_delete_every_rewritten_row(spark, tmp_path):
+    """A MERGE whose write produces no rows at all (it deletes every row of
+    the files it rewrites) still commits and reports its counts."""
+    lake = LakeTable.create(str(tmp_path / "empty"), spark, n_buckets=1)
+    row = [("r", "K", "c", "py", "x")]
+    lake.merge_into(_src(spark, row)).when_not_matched_insert().execute()
+    res = lake.merge_into(_src(spark, row)).when_matched_delete().execute()
+    assert (res["rows_deleted"], res["files_rewritten"]) == (1, 1)
+    assert _state(lake) == {}

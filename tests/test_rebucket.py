@@ -175,3 +175,41 @@ def test_expire_after_rebucket_reclaims_old_layout(spark, tmp_path):
     assert gc["removed_files"] > 0          # the whole old layout is gone
     assert lake.state_checksum() == checksum
     assert not os.path.exists(lake._meta_path(pre_version))
+
+
+def test_rebucket_retries_after_concurrent_commit(spark, tmp_path, monkeypatch):
+    """A merge-on-read commit from a second handle lands between rebucket's
+    full-table rewrite and its install.  The rewrite no longer reflects the
+    table, so the install must conflict and rebucket must re-run its body
+    against the fresh snapshot — returning normally, in the new layout,
+    with the concurrent batches' rows included."""
+    n = 3000
+    stream = synth_change_stream(spark, n, 400, seed=11).cache()
+    half = n // 2
+    lake = LakeTable.create(str(tmp_path / "rb"), spark, n_buckets=8, write_mode="mor")
+    replay(lake, stream.where(f"lsn < {half}"), batch_lsns=n // 4, max_lsn=half - 1)
+    other = LakeTable(lake.root, spark)
+
+    orig = LakeTable._try_install_snapshot
+    raced = []
+
+    def racing_install(self, meta):
+        if not raced and "rebucket" in meta["lineage"][-1]:
+            raced.append(meta["version"])
+            replay(other, stream.where(f"lsn >= {half}"), batch_lsns=n // 4,
+                   batch_id_prefix="t", max_lsn=n - 1)
+        return orig(self, meta)
+
+    monkeypatch.setattr(LakeTable, "_try_install_snapshot", racing_install)
+    entry = lake.rebucket(16)
+    monkeypatch.setattr(LakeTable, "_try_install_snapshot", orig)
+
+    assert raced, "the concurrent commit must land before rebucket's first install"
+    assert entry["rebucket"] == [8, 16]
+    assert entry["version"] > raced[0]
+    assert lake.metadata()["n_buckets"] == 16
+    ref = LakeTable.create(str(tmp_path / "ref"), spark, n_buckets=8, write_mode="mor")
+    replay(ref, stream.where(f"lsn < {half}"), batch_lsns=n // 4, max_lsn=half - 1)
+    replay(ref, stream.where(f"lsn >= {half}"), batch_lsns=n // 4,
+           batch_id_prefix="t", max_lsn=n - 1)
+    assert lake.state_checksum() == ref.state_checksum()

@@ -48,12 +48,12 @@ without IO; a bloom hit (rare; false positives only degrade to a lookup,
 never to a wrong skip) binary-searches the sorted segments.
 
 File-grain MERGE (the round-2 "bucket-grain COW" fix): every data file
-carries a ``_khash = xxhash64(repo,path,commit)`` column, files are written
-key-hash-clustered (sortWithinPartitions + maxRecordsPerFile), and the
-manifest records each file's (min,max) khash from its parquet footer.  A
-MERGE broadcast-joins the batch's touched keys against the file ranges and
-rewrites ONLY intersecting files — rewrite bytes scale with touched keys,
-not bucket count × bucket size (measured: BENCH/merge_prune_bench.py).
+carries a ``_khash = xxhash64(repo,path,commit)`` column, files are
+key-hash-clustered, and the manifest records each file's (min,max) khash
+from its parquet footer.  A MERGE broadcast-joins the batch's touched keys
+against the file ranges and rewrites ONLY intersecting files — rewrite
+bytes scale with touched keys, not bucket count × bucket size (measured:
+BENCH/merge_prune_bench.py).
 Inserts append new files (ranges may overlap older files; pruning uses
 interval intersection, so overlap costs read amplification only —
 ``compact()`` re-sorts a bucket back to disjoint files).
@@ -62,7 +62,7 @@ MERGE-ON-READ (``mode="mor"`` / ``create(write_mode="mor")``): the Iceberg
 v2 equality-delete analogue for hot-random-key ingest, where even file-grain
 COW rewrites many files per batch.  A MoR commit appends the batch's upsert
 rows as new data files plus its delete keys as TOMBSTONE files
-(``data/v{N}/_tombs/``, key cols + khash only, ``kind:"tomb"`` in the
+(``data/c-{uid}/_tombs/``, key cols + khash only, ``kind:"tomb"`` in the
 manifest) and rewrites NOTHING — write cost is O(batch) regardless of key
 scatter.  Buckets now holding multiple versions of a key are flagged in
 ``meta["dirty"]``; ``read()`` resolves them with one per-key
@@ -71,6 +71,24 @@ tombstones kill, clean buckets stay scan-only), and ``compact()`` folds a
 dirty bucket back to single-version clean files.  Modes mix safely: a COW
 merge touching a dirty bucket resolves it first (see ``merge``).  The
 COW/MoR crossover is measured in BENCH/merge_prune_bench.py.
+
+ONE REWRITE PATH: every operation that rewrites table state — COW
+``merge``, ``compact``, ``delete_where`` / ``update_where``,
+``merge_into`` and ``rebucket`` — reads, stages and installs through the
+same three helpers.  ``_read_plan`` reads the bucket -> entries map the
+operation pruned, and enforces the GHOST-TOMBSTONE rule: a clean bucket
+reads its data files only, because a tombstone there names a key that was
+never present and reading it as data would resurrect that key as a
+null-payload row; a dirty bucket reads data and tombstones and resolves
+them per key.  ``_stage`` writes the result under a commit-unique
+``data/c-{uid}/`` dir, bucket-partitioned, khash-sorted, rolled at
+``target_file_rows``, and collects the footer stats the manifest records.
+``_install_rewrite`` validates the read set on rebase, stamps the new
+entries with the install-time ``seq``, carries the untouched entries,
+clears ``dirty`` and drops emptied buckets.  ``_retry_body`` re-runs the
+whole operation when a concurrent commit invalidated what it read.  MoR
+appends stage through ``_stage`` too and install through
+``_install_mor_entries``, which the Spark-less streaming sink shares.
 
 Correctness argument for exactly-once: all commit state (which batches are
 applied, watermarks, live files) lives in ONE metadata file published with
@@ -86,9 +104,9 @@ catalog-CAS analogue): exactly one writer can publish ``v{N}.json`` (the
 protocol is a conditional PUT).  A loser re-reads the winner's snapshot and
 REBASES: MoR merges read no table state, so their already-staged files
 simply re-stamp to a later manifest ``seq`` — no Spark work re-runs;
-COW merges/compactions validate that no interleaved commit touched the
-buckets they read, and re-run their body otherwise (``CommitConflictError``
-after ``_BODY_ATTEMPTS``).  Exactly-once survives the race: a rebase
+rewrites validate that no interleaved commit touched the buckets they
+read, and re-run their body otherwise (``CommitConflictError`` after
+``_BODY_ATTEMPTS``).  Exactly-once survives the race: a rebase
 re-checks the batch id against the winner's applied set.  ``CURRENT`` is a
 hint, not truth — a committer can die between publishing the snapshot and
 advancing the pointer, so readers walk forward from the hint while the next
@@ -210,6 +228,21 @@ class CommitConflictError(RuntimeError):
     and re-run their body against the fresh snapshot up to
     ``_BODY_ATTEMPTS`` times; seeing it propagate means the table is under
     sustained conflicting write pressure on the same buckets."""
+
+
+def _retry_body(body):
+    """Run ``body()`` — one whole operation against a freshly read
+    snapshot — again whenever a concurrent commit invalidated its read set
+    (``CommitConflictError``), up to ``_BODY_ATTEMPTS`` times; the last
+    conflict propagates."""
+    last: Optional[CommitConflictError] = None
+    for _ in range(_BODY_ATTEMPTS):
+        try:
+            return body()
+        except CommitConflictError as e:
+            _bump("body_retries")
+            last = e
+    raise last
 
 
 class BucketLayoutChangedError(RuntimeError):
@@ -937,35 +970,11 @@ class LakeTable:
         dirty buckets; clean buckets stream through scan-only as before.
         ``compact()`` restores a bucket to the scan-only path."""
         meta = self.metadata(version)
-        files = self._bucket_files(meta, buckets)
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        dirty = meta.get("dirty", {})
-        clean_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
-        for b, entries in files.items():
-            if str(b) in dirty:
-                for e in entries:
-                    (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                        (e["path"], _entry_seq(e))
-                    )
-            else:
-                # a tombstone in a CLEAN bucket can only name keys that were
-                # never present (delete of a non-existent key) — skip it
-                clean_paths.extend(
-                    (e["path"], _entry_seq(e)) for e in entries if e.get("kind") != "tomb"
-                )
-        parts: List[DataFrame] = []
-        if clean_paths:
-            parts.append(self._read_files(clean_paths, schema, meta["n_buckets"], meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, meta["n_buckets"], meta=meta)
-            )
-        if not parts:
+        df = self._read_plan(meta, self._bucket_files(meta, buckets))
+        if df is None:
+            schema = T.StructType.fromJson(json.loads(meta["schema"]))
             with_bucket = T.StructType(list(schema.fields) + [T.StructField(BUCKET_COL, T.LongType())])
             return self.spark.createDataFrame([], with_bucket)
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         return df.drop(KHASH_COL)
 
     def _scan_predicates(self, schema: T.StructType, where) -> List[tuple]:
@@ -1015,36 +1024,33 @@ class LakeTable:
 
     def _prune_for_scan(
         self, meta: dict, preds: List[tuple], buckets: Optional[List[int]]
-    ) -> Tuple[List[str], List[Tuple[str, int]], List[Tuple[str, int]], int, int]:
-        """Split the snapshot's live files into (kept clean paths, MoR data,
-        MoR tombs) under the predicates; returns (…, kept, total) data-file
-        counts for observability.  Dirty (merge-on-read) buckets are NEVER
-        stats-pruned: a key's winner is decided across file versions, so
-        dropping a file because its values don't match could resurrect an
-        older matching version of a key whose CURRENT version doesn't match
-        — those buckets resolve fully and filter after."""
+    ) -> Tuple[Dict[int, List[dict]], int, int]:
+        """The snapshot's live entries that can hold a row satisfying the
+        predicates, as a bucket -> entries map for ``_read_plan``, plus the
+        (kept, total) data-file counts for observability.  Clean buckets
+        keep the data files whose manifest bounds can match.  Dirty
+        (merge-on-read) buckets are NEVER stats-pruned: a key's winner is
+        decided across file versions, so dropping a file because its values
+        don't match could resurrect an older matching version of a key
+        whose CURRENT version doesn't match — those buckets resolve fully
+        and filter after."""
         files = self._bucket_files(meta, buckets)
         dirty = meta.get("dirty", {})
         era_preds = self._era_preds(meta, preds)
-        clean_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
+        plan: Dict[int, List[dict]] = {}
         kept = total = 0
         for b, entries in files.items():
-            for e in entries:
-                is_tomb = e.get("kind") == "tomb"
-                if not is_tomb:
-                    total += 1
-                if str(b) in dirty:
-                    (mor_tombs if is_tomb else mor_data).append((e["path"], _entry_seq(e)))
-                    if not is_tomb:
-                        kept += 1
-                elif not is_tomb:
-                    seq = _entry_seq(e)
-                    if _file_may_match(e.get("cols"), era_preds(seq)):
-                        clean_paths.append((e["path"], seq))
-                        kept += 1
-        return clean_paths, mor_data, mor_tombs, kept, total
+            data = [e for e in entries if e.get("kind") != "tomb"]
+            total += len(data)
+            if str(b) in dirty:
+                plan[b] = entries
+                kept += len(data)
+                continue
+            hit = [e for e in data if _file_may_match(e.get("cols"), era_preds(_entry_seq(e)))]
+            if hit:
+                plan[b] = hit
+                kept += len(hit)
+        return plan, kept, total
 
     def scan(
         self,
@@ -1076,17 +1082,10 @@ class LakeTable:
         meta = self.metadata(version)
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         preds = self._scan_predicates(schema, where)
-        clean_paths, mor_data, mor_tombs, _, _ = self._prune_for_scan(meta, preds, buckets)
-        parts: List[DataFrame] = []
-        if clean_paths:
-            parts.append(self._read_files(clean_paths, schema, meta["n_buckets"], meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, meta["n_buckets"], meta=meta)
-            )
-        if not parts:
+        plan, _, _ = self._prune_for_scan(meta, preds, buckets)
+        df = self._read_plan(meta, plan)
+        if df is None:
             return self.spark.createDataFrame([], schema)
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         resid = None
         for col, op, val in preds:
             c = _PRED_EXPRS[op](F.col(col), F.lit(val))
@@ -1101,8 +1100,61 @@ class LakeTable:
         meta = self.metadata(version)
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
         preds = self._scan_predicates(schema, where)
-        _, _, _, kept, total = self._prune_for_scan(meta, preds, None)
+        _, kept, total = self._prune_for_scan(meta, preds, None)
         return {"kept_files": kept, "total_files": total}
+
+    def _read_plan(
+        self,
+        meta: dict,
+        files: Dict[int, List[dict]],
+        n_buckets: Optional[int] = None,
+        khash_in: Optional[List[int]] = None,
+    ) -> Optional[DataFrame]:
+        """The one read plan every reader and rewrite shares.  ``files`` is
+        a bucket -> live entries map the caller has already pruned (by
+        stats bounds, khash ranges, touched files, ...).  A CLEAN bucket
+        reads its data files only: a tombstone there can only name a key
+        that was never present (a merge-on-read delete into an empty
+        bucket), and reading it through the data schema would resurrect
+        that key as a null-payload row — the ghost-tombstone rule.  A DIRTY
+        bucket reads data AND tombstones and resolves them per key
+        (``_resolved_files``).  Returns the clean part unioned with the
+        resolved part (clean first; table columns + ``_bucket`` +
+        ``_khash``), or None when the map holds nothing readable.
+
+        ``n_buckets`` labels rows in another bucket layout (``rebucket``);
+        ``khash_in`` keeps only those key hashes, cut on both parts before
+        resolution (``lookup``)."""
+        schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        n_buckets = meta["n_buckets"] if n_buckets is None else n_buckets
+        dirty = meta.get("dirty", {})
+        clean: List[Tuple[str, int]] = []
+        mor_data: List[Tuple[str, int]] = []
+        mor_tombs: List[Tuple[str, int]] = []
+        for b, entries in files.items():
+            for e in entries:
+                is_tomb = e.get("kind") == "tomb"
+                if str(b) in dirty:
+                    (mor_tombs if is_tomb else mor_data).append((e["path"], _entry_seq(e)))
+                elif not is_tomb:
+                    clean.append((e["path"], _entry_seq(e)))
+        parts: List[DataFrame] = []
+        if clean:
+            df = self._read_files(clean, schema, n_buckets, meta=meta)
+            if khash_in is not None:
+                # files are khash-sorted, so this pushes down to parquet
+                # row-group stats and skips pages inside the kept files too
+                df = df.where(F.col(KHASH_COL).isin(khash_in))
+            parts.append(df)
+        if mor_data or mor_tombs:
+            parts.append(
+                self._resolved_files(
+                    mor_data, mor_tombs, schema, n_buckets, khash_in=khash_in, meta=meta
+                )
+            )
+        if not parts:
+            return None
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def _resolved_files(
         self,
@@ -1325,6 +1377,44 @@ class LakeTable:
             out.setdefault(bucket, []).append(entry)
         return out
 
+    def _stage(
+        self,
+        df: DataFrame,
+        meta: dict,
+        n_parts: int,
+        order: Optional[list] = None,
+        kind: str = "data",
+        rel_dir: Optional[str] = None,
+    ) -> Dict[int, List[dict]]:
+        """Write ``df`` (table columns + ``_bucket`` + ``_khash``) as staged
+        files and return their manifest entries by bucket.  One task per
+        bucket group, rows sorted by ``order`` (default bucket, khash — the
+        clustering MERGE's range pruning relies on), ``_bucket=`` partition
+        dirs.  Data files roll at the table's ``target_file_rows`` and carry
+        its parquet blooms; tombstone files (``kind="tomb"``, key columns +
+        khash) take neither.
+
+        Files land under a commit-unique ``data/c-{uid}/`` dir (or
+        ``rel_dir``): racing writers never share a path, and the files are
+        version-agnostic — their MoR resolution order is the manifest
+        ``seq`` stamped at install — so a lost install race rebases WITHOUT
+        re-running this write."""
+        rel_dir = rel_dir or os.path.join("data", f"c-{_uid()}")
+        out_dir = os.path.join(self.root, rel_dir)
+        w = (
+            df.repartition(max(n_parts, 1), F.col(BUCKET_COL))
+            .sortWithinPartitions(*(order or [BUCKET_COL, KHASH_COL]))
+            .write.mode("overwrite")
+        )
+        if kind == "data":
+            w = w.option(
+                "maxRecordsPerFile", meta.get("target_file_rows", 1_000_000)
+            ).options(**_bloom_opts(meta))
+        w.partitionBy(BUCKET_COL).parquet(out_dir)
+        return self._new_file_stats(
+            out_dir, rel_dir, kind=kind, stats_cols=meta.get("stats_cols")
+        )
+
     def merge(
         self,
         upserts: DataFrame,
@@ -1374,36 +1464,15 @@ class LakeTable:
         holds across writers: a duplicate ``batch_id`` racing in from two
         committers lands exactly once (the loser's rebase re-checks the
         applied set against the winner's snapshot)."""
-        last: Optional[CommitConflictError] = None
-        for _ in range(_BODY_ATTEMPTS):
-            meta = self.metadata()
-            if self.is_applied(batch_id, meta):
-                return {"batch_id": batch_id, "skipped": True, "version": meta["version"]}
-            # bucket ids in caller-supplied hints are layout-relative: if a
-            # concurrent rebucket() replaced the layout the caller computed
-            # them under, honoring them would prune the wrong files and
-            # advance the wrong watermarks — fail to the caller, which
-            # recomputes against the fresh snapshot
-            if hint_n_buckets is not None and hint_n_buckets != meta["n_buckets"]:
-                raise BucketLayoutChangedError(
-                    f"hints computed for n_buckets={hint_n_buckets} but the "
-                    f"table now has n_buckets={meta['n_buckets']} "
-                    "(concurrent rebucket); recompute changed_buckets / "
-                    "batch_watermarks against the current snapshot"
-                )
-            try:
-                return self._merge_once(
-                    meta, upserts, deletes, batch_id, batch_watermarks,
-                    lineage, changed_buckets, mode, touched_hint,
-                )
-            except CommitConflictError as e:
-                _bump("body_retries")
-                last = e
-        raise last
+        return _retry_body(
+            lambda: self._merge_once(
+                upserts, deletes, batch_id, batch_watermarks, lineage,
+                changed_buckets, mode, touched_hint, hint_n_buckets,
+            )
+        )
 
     def _merge_once(
         self,
-        meta: dict,
         upserts: DataFrame,
         deletes: DataFrame,
         batch_id: str,
@@ -1412,9 +1481,25 @@ class LakeTable:
         changed_buckets: Optional[List[int]],
         mode: Optional[str],
         touched_hint: Optional[DataFrame],
+        hint_n_buckets: Optional[int],
     ) -> dict:
-        """One MERGE body against a base snapshot; raises
+        """One MERGE body against the current snapshot; raises
         ``CommitConflictError`` when a concurrent commit invalidates it."""
+        meta = self.metadata()
+        if self.is_applied(batch_id, meta):
+            return {"batch_id": batch_id, "skipped": True, "version": meta["version"]}
+        # bucket ids in caller-supplied hints are layout-relative: if a
+        # concurrent rebucket() replaced the layout the caller computed
+        # them under, honoring them would prune the wrong files and
+        # advance the wrong watermarks — fail to the caller, which
+        # recomputes against the fresh snapshot
+        if hint_n_buckets is not None and hint_n_buckets != meta["n_buckets"]:
+            raise BucketLayoutChangedError(
+                f"hints computed for n_buckets={hint_n_buckets} but the "
+                f"table now has n_buckets={meta['n_buckets']} "
+                "(concurrent rebucket); recompute changed_buckets / "
+                "batch_watermarks against the current snapshot"
+            )
         mode = mode or meta.get("write_mode", "cow")
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r} (use 'cow' or 'mor')")
@@ -1534,23 +1619,19 @@ class LakeTable:
             MERGE_TIMINGS.append(("merge_prune", time.time() - _t0))
 
         _t_write0 = time.time()
-        rewrite = [flat_entries[i] for i in sorted(touched_ids)]
+        rewrite: Dict[int, List[dict]] = {}
         kept: Dict[int, List[dict]] = {b: [] for b in current_files}
         for i, (b, e) in enumerate(flat_entries):  # one pass, O(n_files)
-            if i not in touched_ids:
-                kept[b].append(e)
-        commit["files_rewritten"] = len(rewrite)
-        commit["bytes_rewritten"] = sum(e["bytes"] for _, e in rewrite)
+            (rewrite.setdefault(b, []) if i in touched_ids else kept[b]).append(e)
+        commit["files_rewritten"] = sum(len(es) for es in rewrite.values())
+        commit["bytes_rewritten"] = sum(e["bytes"] for es in rewrite.values() for e in es)
 
         new_files: Dict[int, List[dict]] = {}
         if changed:
-            schema = T.StructType.fromJson(json.loads(meta["schema"]))
             upsert_part = upserts.select(*schema_cols, BUCKET_COL, KHASH_COL)
-            if rewrite:
-                current = self._read_files(
-                    [(e["path"], _entry_seq(e)) for _, e in rewrite],
-                    schema, n_buckets, meta=meta,
-                )
+            merged = upsert_part
+            current = self._read_plan(meta, rewrite)
+            if current is not None:
                 # co-partitioned anti-join: survivors = rows of rewritten
                 # files whose key is NOT touched by this batch
                 survivors = current.join(
@@ -1559,24 +1640,7 @@ class LakeTable:
                 merged = survivors.select(*schema_cols, BUCKET_COL, KHASH_COL).unionByName(
                     upsert_part
                 )
-            else:
-                merged = upsert_part
-            # staged under a commit-unique dir: racing writers never share a
-            # path, and the files are version-agnostic (their MoR resolution
-            # order is the manifest-stamped ``seq``), so a lost install race
-            # rebases WITHOUT re-running this write
-            rel_dir = os.path.join("data", f"c-{_uid()}")
-            out_dir = os.path.join(self.root, rel_dir)
-            (
-                merged.repartition(max(len(changed), 1), F.col(BUCKET_COL))
-                .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-                .options(**_bloom_opts(meta))
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
-            )
-            new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
+            new_files = self._stage(merged, meta, len(changed))
             commit["files_written"] = sum(len(es) for es in new_files.values())
             commit["bytes_written"] = sum(
                 e["bytes"] for es in new_files.values() for e in es
@@ -1587,41 +1651,13 @@ class LakeTable:
         # a bucket's live list changed iff one of its files was rewritten
         # or a new file landed in it; every other bucket keeps pointing at
         # its existing manifest (so a changed=ALL-buckets replay does NOT
-        # rewrite O(total files) of manifest entries)
-        touched_buckets = {flat_entries[i][0] for i in touched_ids}
-        read_meta = meta
-
-        def build(base: dict):
-            if base is not read_meta:
-                # the rewrite's survivors are only valid against the file
-                # sets it read: every bucket this merge READ (changed) must
-                # be untouched by the interleaved commits
-                self._validate_base(read_meta, base, changed, batch_id)
-            new_version = base["version"] + 1
-            c = {**commit, "version": new_version}
-            manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-            bucket_map = dict(base["buckets"])
-            segments: List[Tuple[str, dict]] = []
-            manifest_buckets: Dict[str, List[dict]] = {}
-            for b in sorted(touched_buckets | set(new_files)):
-                entries = kept.get(b, []) + [
-                    {**e, "seq": new_version} for e in new_files.get(b, [])
-                ]
-                if entries:
-                    manifest_buckets[str(b)] = entries
-                    bucket_map[str(b)] = manifest_rel
-                else:
-                    bucket_map.pop(str(b), None)  # bucket emptied by deletes
-            if manifest_buckets:
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, c, bucket_map, segments,
-                batch_watermarks, batch_id, dirty=base.get("dirty", {}),
-            )
-            return new_meta, segments, c
-
+        # rewrite O(total files) of manifest entries).  The survivors are
+        # only valid against the file sets this merge READ (changed).
         _t_io0 = time.time()
-        result = self._commit_loop(read_meta, build)
+        result = self._install_rewrite(
+            meta, changed, set(rewrite) | set(new_files), kept, new_files, commit,
+            batch_id=batch_id, watermarks=batch_watermarks,
+        )
         if MERGE_TIMINGS is not None:
             MERGE_TIMINGS.append(("commit_io", time.time() - _t_io0))
         return result
@@ -1652,6 +1688,74 @@ class LakeTable:
             ) != bool(rd.get(str(b))):
                 raise CommitConflictError(f"bucket {b} was changed by a concurrent commit")
 
+    def _install_rewrite(
+        self,
+        read_meta: dict,
+        read_set,
+        touched,
+        carried: Dict[int, List[dict]],
+        new_files: Dict[int, List[dict]],
+        entry: dict,
+        batch_id: Optional[str] = None,
+        watermarks: Optional[Dict[int, int]] = None,
+        relayout: Optional[dict] = None,
+    ) -> dict:
+        """Install a commit whose Spark work READ table state (every
+        rewrite: merge, compact, delete/update_where, MERGE INTO, rebucket)
+        through the optimistic commit loop.  Each ``touched`` bucket's live
+        list becomes its ``carried`` entries plus its ``new_files`` stamped
+        with ``seq`` = the new version, and it leaves ``dirty`` (its state
+        was read resolved, or never was multi-version); a bucket left with
+        no entries drops out of the map.  Every other bucket keeps pointing
+        at its existing manifest.
+
+        On a rebase the buckets in ``read_set`` (a list, or a zero-arg
+        callable evaluated only then) must be untouched by the interleaved
+        commits (``_validate_base``); ``read_set=None`` means the whole
+        table was read, so any interleaved commit conflicts.  ``batch_id``
+        joins the applied set, ``watermarks`` merge into the snapshot's, and
+        ``relayout`` overrides snapshot keys after the advance (``rebucket``
+        swaps the layout and its remapped watermarks)."""
+        touched = sorted(set(touched))
+
+        def build(base: dict):
+            if base is not read_meta:
+                if read_set is None:
+                    raise CommitConflictError(
+                        "a concurrent commit changed the table this rewrite read in full"
+                    )
+                buckets = read_set() if callable(read_set) else read_set
+                self._validate_base(read_meta, base, sorted(buckets), batch_id)
+            new_version = base["version"] + 1
+            c = {**entry, "version": new_version}
+            if batch_id is not None:
+                c["batch_id"] = batch_id
+            manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
+            bucket_map = dict(base["buckets"])
+            dirty = dict(base.get("dirty", {}))
+            manifest_buckets: Dict[str, List[dict]] = {}
+            for b in touched:
+                dirty.pop(str(b), None)
+                entries = list(carried.get(b, [])) + [
+                    {**e, "seq": new_version} for e in new_files.get(b, [])
+                ]
+                if entries:
+                    manifest_buckets[str(b)] = entries
+                    bucket_map[str(b)] = manifest_rel
+                else:  # every row of the bucket was deleted
+                    bucket_map.pop(str(b), None)
+            segments: List[Tuple[str, dict]] = []
+            if manifest_buckets:
+                segments.append((manifest_rel, {"buckets": manifest_buckets}))
+            new_meta = self._advance_meta(
+                base, new_version, c, bucket_map, segments,
+                watermarks, batch_id, dirty=dirty,
+            )
+            new_meta.update(relayout or {})
+            return new_meta, segments, c
+
+        return self._commit_loop(read_meta, build)
+
     def _advance_meta(
         self,
         meta: dict,
@@ -1671,7 +1775,10 @@ class LakeTable:
         write."""
         watermarks = dict(meta["watermarks"])
         for b, lsn in (batch_watermarks or {}).items():
-            watermarks[str(b)] = max(watermarks.get(str(b), -1), int(lsn))
+            # no floor: LSNs may be negative, and a -1 default would claim
+            # events up to -1 applied
+            cur = watermarks.get(str(b))
+            watermarks[str(b)] = int(lsn) if cur is None else max(cur, int(lsn))
 
         if batch_id is not None:
             applied = {
@@ -1746,24 +1853,12 @@ class LakeTable:
             commit.update(lineage)
 
         rel_dir = os.path.join("data", f"c-{_uid()}")
-        out_dir = os.path.join(self.root, rel_dir)
 
         _t0 = time.time()
-        n_parts = max(len(changed), 1)
-        (
-            upserts.select(*schema_cols, BUCKET_COL, KHASH_COL)
-            .repartition(n_parts, F.col(BUCKET_COL))
-            .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-            .options(**_bloom_opts(meta))
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
+        new_files = self._stage(
+            upserts.select(*schema_cols, BUCKET_COL, KHASH_COL), meta, len(changed),
+            rel_dir=rel_dir,
         )
-        new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
-
-        tomb_rel_dir = os.path.join(rel_dir, "_tombs")
-        tomb_out = os.path.join(self.root, tomb_rel_dir)
         # Tombstones need only the batch's delete KEYS, and the raw
         # pre-dedup batch supplies them without re-running the LWW
         # reduction (the second full shuffle this job used to cost).
@@ -1780,15 +1875,10 @@ class LakeTable:
             )
         else:
             tomb_keys = deletes.select(*KEY_COLS, BUCKET_COL, KHASH_COL)
-        (
-            tomb_keys
-            .repartition(n_parts, F.col(BUCKET_COL))
-            .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tomb_out)
+        tomb_files = self._stage(
+            tomb_keys, meta, len(changed), kind="tomb",
+            rel_dir=os.path.join(rel_dir, "_tombs"),
         )
-        tomb_files = self._new_file_stats(tomb_out, tomb_rel_dir, kind="tomb")
         commit["tomb_files"] = sum(len(es) for es in tomb_files.values())
         commit["files_written"] = sum(len(es) for es in new_files.values()) + commit["tomb_files"]
         commit["bytes_written"] = sum(
@@ -2383,14 +2473,9 @@ class LakeTable:
         re-run (``_BODY_ATTEMPTS``); commits into other buckets rebase for
         free.  This is what makes a background compactor safe to run beside
         a live ingest writer."""
-        last: Optional[CommitConflictError] = None
-        for _ in range(_BODY_ATTEMPTS):
-            try:
-                return self._compact_once(buckets, min_files, sort_cols, zorder)
-            except CommitConflictError as e:
-                _bump("body_retries")
-                last = e
-        raise last
+        return _retry_body(
+            lambda: self._compact_once(buckets, min_files, sort_cols, zorder)
+        )
 
     def _compact_once(
         self,
@@ -2401,7 +2486,7 @@ class LakeTable:
     ) -> dict:
         meta = self.metadata()
         files = self._bucket_files(meta, buckets)
-        dirty = dict(meta.get("dirty", {}))
+        dirty = meta.get("dirty", {})
         todo = {
             b: es
             for b, es in files.items()
@@ -2410,39 +2495,13 @@ class LakeTable:
         if not todo:
             return {"compacted_buckets": 0, "files_before": 0, "files_after": 0}
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        rel_dir = os.path.join("data", f"c-{_uid()}")
-        out_dir = os.path.join(self.root, rel_dir)
-        # kind filter matters: a CLEAN bucket can still hold tombstones
-        # (deletes of never-present keys); reading one with the data schema
-        # would resurrect those keys as null-payload rows
-        clean_paths = [
-            (e["path"], _entry_seq(e))
-            for b, es in todo.items()
-            if str(b) not in dirty
-            for e in es
-            if e.get("kind") != "tomb"
-        ]
-        mor_data = [
-            (e["path"], _entry_seq(e)) for b, es in todo.items() if str(b) in dirty
-            for e in es if e.get("kind") != "tomb"
-        ]
-        mor_tombs = [
-            (e["path"], _entry_seq(e)) for b, es in todo.items() if str(b) in dirty
-            for e in es if e.get("kind") == "tomb"
-        ]
-        parts: List[DataFrame] = []
-        if clean_paths:
-            parts.append(self._read_files(clean_paths, schema, meta["n_buckets"], meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, meta["n_buckets"], meta=meta)
-            )
         known = {f.name for f in schema.fields}
         for c in sort_cols or []:
             if c not in known:
                 raise KeyError(f"sort column {c!r} not in table schema {sorted(known)}")
-        if parts:
-            df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        df = self._read_plan(meta, todo)
+        new_files: Dict[int, List[dict]] = {}
+        if df is not None:
             if zorder:
                 from .clustering import zorder_column
 
@@ -2453,57 +2512,17 @@ class LakeTable:
                 ]
             else:
                 order = [BUCKET_COL, *(sort_cols or []), KHASH_COL]
-            (
-                df.repartition(len(todo), F.col(BUCKET_COL))
-                .sortWithinPartitions(*order)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-                .options(**_bloom_opts(meta))
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
-            )
-            new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
-        else:
-            # every qualifying bucket holds only clean-bucket tombstones
-            # (deletes of never-present keys): nothing to read or rewrite —
-            # the commit simply drops those entries (semantics-free, they
-            # suppress nothing) and GC reclaims the files
-            new_files = {}
-        read_meta = meta
-        entry_base = {
+            new_files = self._stage(df, meta, len(todo), order=order)
+        # else every qualifying bucket holds only clean-bucket tombstones
+        # (deletes of never-present keys): nothing to read or rewrite — the
+        # commit simply drops those entries (semantics-free, they suppress
+        # nothing) and GC reclaims the files
+        entry = {
             "compaction": sorted(todo),
             "files_before": sum(len(es) for es in todo.values()),
             "files_after": sum(len(es) for es in new_files.values()),
         }
-
-        def build(base: dict):
-            if base is not read_meta:
-                self._validate_base(read_meta, base, sorted(todo), None)
-            new_version = base["version"] + 1
-            entry = {**entry_base, "version": new_version}
-            manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-            manifest_buckets = {
-                str(b): [{**e, "seq": new_version} for e in es]
-                for b, es in new_files.items()
-            }
-            bucket_map = dict(base["buckets"])
-            d = dict(base.get("dirty", {}))
-            for b in todo:
-                d.pop(str(b), None)  # single-version again
-                if str(b) in manifest_buckets:
-                    bucket_map[str(b)] = manifest_rel
-                else:  # bucket fully emptied (every key tombstoned)
-                    bucket_map.pop(str(b), None)
-            segments: List[Tuple[str, dict]] = []
-            if manifest_buckets:
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, entry, bucket_map, segments,
-                None, None, dirty=d,
-            )
-            return new_meta, segments, entry
-
-        return self._commit_loop(read_meta, build)
+        return self._install_rewrite(meta, sorted(todo), todo, {}, new_files, entry)
 
     def delete_where(self, where, batch_id: Optional[str] = None) -> dict:
         """Row-level predicate delete (``DELETE FROM t WHERE …`` — the
@@ -2518,7 +2537,7 @@ class LakeTable:
         Dirty (merge-on-read) buckets resolve fully on the way through and
         come out clean (same as ``compact``) — a predicate cannot be
         evaluated against unresolved multi-version state."""
-        return self._mutate_where(where, None, batch_id)
+        return _retry_body(lambda: self._mutate_once(where, None, batch_id))
 
     def update_where(
         self, where, set_values: Dict[str, object], batch_id: Optional[str] = None
@@ -2532,19 +2551,8 @@ class LakeTable:
         dirty-bucket handling as in ``delete_where``."""
         if not set_values:
             raise ValueError("update_where requires at least one SET column")
-        return self._mutate_where(where, dict(set_values), batch_id)
-
-    def _mutate_where(
-        self, where, set_values: Optional[Dict[str, object]], batch_id: Optional[str]
-    ) -> dict:
-        last: Optional[CommitConflictError] = None
-        for _ in range(_BODY_ATTEMPTS):
-            try:
-                return self._mutate_once(where, set_values, batch_id)
-            except CommitConflictError as e:
-                _bump("body_retries")
-                last = e
-        raise last
+        set_values = dict(set_values)
+        return _retry_body(lambda: self._mutate_once(where, set_values, batch_id))
 
     def _mutate_once(
         self, where, set_values: Optional[Dict[str, object]], batch_id: Optional[str]
@@ -2571,48 +2579,31 @@ class LakeTable:
         # files whose stats bounds can match, carrying the rest untouched
         # (bounds looked up under each file's ERA-physical column names —
         # see _era_preds for the rename-into-reused-name hazard)
-        rewrite_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
+        plan: Dict[int, List[dict]] = {}
         carry: Dict[int, List[dict]] = {}
-        touched: List[int] = []
         for b, entries in files.items():
             if str(b) in dirty:
-                touched.append(b)
-                for e in entries:
-                    (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                        (e["path"], _entry_seq(e))
-                    )
-            else:
-                cand = [
-                    e for e in entries
-                    if e.get("kind") != "tomb"
-                    and _file_may_match(e.get("cols"), era_preds(_entry_seq(e)))
-                ]
-                if cand:
-                    touched.append(b)
-                    rewrite_paths.extend((e["path"], _entry_seq(e)) for e in cand)
-                    keep = [e for e in entries if e not in cand]
-                    carry[b] = keep
+                plan[b] = entries
+                continue
+            cand = [
+                e for e in entries
+                if e.get("kind") != "tomb"
+                and _file_may_match(e.get("cols"), era_preds(_entry_seq(e)))
+            ]
+            if cand:
+                plan[b] = cand
+                carry[b] = [e for e in entries if e not in cand]
         op_name = "update" if set_values else "delete"
-        if not touched and batch_id is None:
+        if not plan and batch_id is None:
             return {"mutation": op_name, "rows_matched": 0, "files_rewritten": 0,
                     "skipped": False, "version": meta["version"]}
 
-        parts: List[DataFrame] = []
-        if rewrite_paths:
-            parts.append(self._read_files(rewrite_paths, schema, meta["n_buckets"], meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, meta["n_buckets"], meta=meta)
-            )
+        df = self._read_plan(meta, plan)
         new_files: Dict[int, List[dict]] = {}
         matched = 0
-        rel_dir = os.path.join("data", f"c-{_uid()}")
-        if parts:
+        if df is not None:
             from pyspark.sql import Observation
 
-            df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
             resid = None
             for col, op, val in preds:
                 c = _PRED_EXPRS[op](F.col(col), F.lit(val))
@@ -2643,17 +2634,7 @@ class LakeTable:
                 out = df.select(*proj)
             else:
                 out = df.where(~hit)
-            out_dir = os.path.join(self.root, rel_dir)
-            (
-                out.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-                .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-                .options(**_bloom_opts(meta))
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
-            )
-            new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
+            new_files = self._stage(out, meta, len(plan))
             try:
                 matched = int(obs.get["matched"])  # write action already ran
             except Exception:
@@ -2662,48 +2643,19 @@ class LakeTable:
                 # asserts on the empty sink's missing metrics); this rare
                 # path pays the second scan the observation exists to avoid
                 matched = df.where(hit).count()
-        read_meta = meta
-        entry_base = {
+        entry = {
             "mutation": op_name,
             "predicates": [[c, o, repr(v)] for c, o, v in preds],
             "rows_matched": matched,
-            "files_rewritten": len(rewrite_paths) + len(mor_data),
+            "files_rewritten": sum(
+                e.get("kind") != "tomb" for es in plan.values() for e in es
+            ),
         }
         if set_values:
-            entry_base["set_columns"] = sorted(set_values)
-
-        def build(base: dict):
-            if base is not read_meta:
-                self._validate_base(read_meta, base, sorted(touched), batch_id)
-            new_version = base["version"] + 1
-            entry = {**entry_base, "version": new_version}
-            if batch_id is not None:
-                entry["batch_id"] = batch_id
-            bucket_map = dict(base["buckets"])
-            d = dict(base.get("dirty", {}))
-            manifest_buckets: Dict[str, List[dict]] = {}
-            for b in touched:
-                d.pop(str(b), None)  # resolved buckets are single-version now
-                entries = list(carry.get(b, [])) + [
-                    {**e, "seq": new_version} for e in new_files.get(b, [])
-                ]
-                if entries:
-                    manifest_buckets[str(b)] = entries
-                else:  # every row of the bucket was deleted
-                    bucket_map.pop(str(b), None)
-            segments: List[Tuple[str, dict]] = []
-            if manifest_buckets:
-                manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-                for b in manifest_buckets:
-                    bucket_map[b] = manifest_rel
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, entry, bucket_map, segments,
-                None, batch_id, dirty=d,
-            )
-            return new_meta, segments, entry
-
-        return self._commit_loop(read_meta, build)
+            entry["set_columns"] = sorted(set_values)
+        return self._install_rewrite(
+            meta, list(plan), plan, carry, new_files, entry, batch_id=batch_id
+        )
 
     def merge_into(self, source: DataFrame) -> "MergeIntoBuilder":
         """General conditional MERGE (the Delta/Iceberg ``MERGE INTO``
@@ -2756,9 +2708,16 @@ class LakeTable:
           conservative resume point; with the default range-watermark
           replay all buckets share one value, so min is exact), else none.
 
+        * concurrency: the rewrite reads the whole table, so ANY commit
+          landing before its install re-runs the body against the fresh
+          snapshot (up to ``_BODY_ATTEMPTS`` times, like ``compact``).
+
         Returns the lineage entry.  Cost: one full-table read + write —
         the explicit one-time price of a layout change, never paid by
         normal commits."""
+        return _retry_body(lambda: self._rebucket_once(new_n_buckets, note))
+
+    def _rebucket_once(self, new_n_buckets: int, note: Optional[str]) -> dict:
         meta = self.metadata()
         old_n = meta["n_buckets"]
         if new_n_buckets < 1:
@@ -2771,44 +2730,10 @@ class LakeTable:
                 f"(got {old_n} -> {new_n_buckets}); chain factors for "
                 f"other targets"
             )
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
         files = self._bucket_files(meta, None)
-        dirty = meta.get("dirty", {})
-        clean_paths = [
-            (e["path"], _entry_seq(e)) for b, es in files.items() if str(b) not in dirty
-            for e in es if e.get("kind") != "tomb"
-        ]
-        mor_data = [
-            (e["path"], _entry_seq(e)) for b, es in files.items() if str(b) in dirty
-            for e in es if e.get("kind") != "tomb"
-        ]
-        mor_tombs = [
-            (e["path"], _entry_seq(e)) for b, es in files.items() if str(b) in dirty
-            for e in es if e.get("kind") == "tomb"
-        ]
-        parts: List[DataFrame] = []
-        if clean_paths:
-            # note new_n_buckets: rows are labeled in the NEW layout
-            parts.append(self._read_files(clean_paths, schema, new_n_buckets, meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(mor_data, mor_tombs, schema, new_n_buckets, meta=meta)
-            )
-        new_files: Dict[int, List[dict]] = {}
-        if parts:
-            df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-            rel_dir = os.path.join("data", f"c-{_uid()}")
-            out_dir = os.path.join(self.root, rel_dir)
-            (
-                df.repartition(new_n_buckets, F.col(BUCKET_COL))
-                .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-                .options(**_bloom_opts(meta))
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
-            )
-            new_files = self._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
+        # note new_n_buckets: rows are labeled in the NEW layout
+        df = self._read_plan(meta, files, n_buckets=new_n_buckets)
+        new_files = {} if df is None else self._stage(df, meta, new_n_buckets)
 
         old_wms = meta.get("watermarks", {})
         new_wms: Dict[str, int] = {}
@@ -2825,38 +2750,19 @@ class LakeTable:
                     if all(s in old_wms for s in srcs):
                         new_wms[str(b)] = min(old_wms[s] for s in srcs)
 
-        entry_base = {
+        entry = {
             "rebucket": [old_n, new_n_buckets],
             "files_after": sum(len(es) for es in new_files.values()),
         }
         if note:
-            entry_base["note"] = note
-        read_meta = meta
-
-        def build(base: dict):
-            if base is not read_meta and base["version"] != read_meta["version"]:
-                # rebucket reads the WHOLE table: any interleaved commit
-                # invalidates the rewrite — re-run the body
-                raise CommitConflictError("table changed during rebucket")
-            new_version = base["version"] + 1
-            entry = {**entry_base, "version": new_version}
-            manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-            manifest_buckets = {
-                str(b): [{**e, "seq": new_version} for e in es]
-                for b, es in new_files.items()
-            }
-            bucket_map = {str(b): manifest_rel for b in new_files}
-            segments: List[Tuple[str, dict]] = []
-            if manifest_buckets:
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = self._advance_meta(
-                base, new_version, entry, bucket_map, segments, None, None, dirty={},
-            )
-            new_meta["n_buckets"] = new_n_buckets
-            new_meta["watermarks"] = new_wms
-            return new_meta, segments, entry
-
-        return self._commit_loop(read_meta, build)
+            entry["note"] = note
+        # rebucket reads the WHOLE table (read_set=None): any interleaved
+        # commit invalidates the rewrite and re-runs the body; every old
+        # bucket leaves the map, the new layout holds only the new files
+        return self._install_rewrite(
+            meta, None, set(files) | set(new_files), {}, new_files, entry,
+            relayout={"n_buckets": new_n_buckets, "watermarks": new_wms, "dirty": {}},
+        )
 
     def compact_if_needed(self, max_files_per_bucket: int = 16) -> dict:
         """Bounded read-amplification policy for a merge-on-read tail: a
@@ -3578,42 +3484,23 @@ class LakeTable:
         by_bucket: Dict[int, List[int]] = {}
         for r in krows:
             by_bucket.setdefault(int(r[BUCKET_COL]), []).append(int(r[KHASH_COL]))
-        files = self._bucket_files(meta, sorted(by_bucket))
-        dirty = meta.get("dirty", {})
-        clean_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
-        for b, entries in files.items():
+        plan: Dict[int, List[dict]] = {}
+        for b, entries in self._bucket_files(meta, sorted(by_bucket)).items():
             hs = by_bucket.get(int(b), [])
-            for e in entries:
-                lo = e.get("min_h", _FULL_RANGE[0])
-                hi = e.get("max_h", _FULL_RANGE[1])
-                if not any(lo <= h <= hi for h in hs):
-                    continue  # file range cannot contain any requested key
-                if str(b) in dirty:
-                    (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                        (e["path"], _entry_seq(e))
-                    )
-                elif e.get("kind") != "tomb":
-                    clean_paths.append((e["path"], _entry_seq(e)))
-        # khash IN-filter: files are khash-sorted, so this pushes down to
-        # parquet row-group stats and skips pages inside the kept files too
-        all_hs = sorted({h for hs in by_bucket.values() for h in hs})
-        hfilter = F.col(KHASH_COL).isin(all_hs)
-        parts: List[DataFrame] = []
-        if clean_paths:
-            parts.append(
-                self._read_files(clean_paths, schema, n_buckets, meta=meta).where(hfilter)
-            )
-        if mor_data or mor_tombs:
-            parts.append(
-                self._resolved_files(
-                    mor_data, mor_tombs, schema, n_buckets, khash_in=all_hs, meta=meta
+            # keep files whose khash range can contain a requested key
+            kept = [
+                e for e in entries
+                if any(
+                    e.get("min_h", _FULL_RANGE[0]) <= h <= e.get("max_h", _FULL_RANGE[1])
+                    for h in hs
                 )
-            )
-        if not parts:
+            ]
+            if kept:
+                plan[b] = kept
+        all_hs = sorted({h for hs in by_bucket.values() for h in hs})
+        df = self._read_plan(meta, plan, khash_in=all_hs)
+        if df is None:
             return self.spark.createDataFrame([], schema)
-        df = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         hit = df.join(F.broadcast(kdf.select(*KEY_COLS)), KEY_COLS, "left_semi")
         return hit.select(*[f.name for f in schema.fields])
 

@@ -61,10 +61,11 @@ front door.
 
 from __future__ import annotations
 
+import functools
 import json
-import os
 from typing import Dict, List, Optional, Tuple
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -166,7 +167,7 @@ class MergeIntoBuilder:
         this call — same guidance as ``wal.py``'s decoders; cheap sources
         (parquet slices, generated frames) recompute faster than they
         cache, so no persist is taken here by default."""
-        from .lake import CommitConflictError, _BODY_ATTEMPTS, _bump
+        from .lake import _retry_body
 
         if not self._clauses:
             raise ValueError("MERGE INTO requires at least one WHEN clause")
@@ -223,25 +224,10 @@ class MergeIntoBuilder:
                     "source, e.g. with lww_dedup, or pass assume_unique=True "
                     "if uniqueness is guaranteed upstream)"
                 )
-        last: Optional[Exception] = None
-        for _ in range(_BODY_ATTEMPTS):
-            try:
-                return self._execute_once(batch_id)
-            except CommitConflictError as e:
-                _bump("body_retries")
-                last = e
-        raise last
+        return _retry_body(lambda: self._execute_once(batch_id))
 
     def _execute_once(self, batch_id: Optional[str]) -> dict:
-        from .lake import (
-            BUCKET_COL,
-            KHASH_COL,
-            _bloom_opts,
-            _entry_seq,
-            _uid,
-            bucket_expr,
-            khash_expr,
-        )
+        from .lake import BUCKET_COL, KHASH_COL, bucket_expr, khash_expr
 
         lake = self._lake
         meta = lake.metadata()
@@ -269,27 +255,14 @@ class MergeIntoBuilder:
         )
         files = lake._bucket_files(meta)
         dirty = meta.get("dirty", {})
-        rewrite_paths: List[str] = []
-        mor_data: List[Tuple[str, int]] = []
-        mor_tombs: List[Tuple[str, int]] = []
+        # bucket -> entries to read (``LakeTable._read_plan``) and, for
+        # pruned clean buckets, the untouched entries carried forward
+        plan: Dict[int, List[dict]] = {}
         carry: Dict[int, List[dict]] = {}
-        touched: set = set()
         if scans_by_source:
             # every target row is evaluated: all buckets touched, nothing
             # carried (a by-source clause may mutate any row)
-            for b, entries in files.items():
-                touched.add(b)
-                if str(b) in dirty:
-                    for e in entries:
-                        (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                            (e["path"], _entry_seq(e))
-                        )
-                else:
-                    rewrite_paths.extend(
-                        (e["path"], _entry_seq(e))
-                        for e in entries
-                        if e.get("kind") != "tomb"
-                    )
+            plan = dict(files)
         else:
             # every clean bucket's files enter the range cut directly — the
             # cut joins on bucket equality, so entries outside the source's
@@ -309,72 +282,45 @@ class MergeIntoBuilder:
                 if flat_entries
                 else set()
             )
-            for i in sorted(touched_ids):
-                b, e = flat_entries[i]
-                touched.add(b)
-                rewrite_paths.append((e["path"], _entry_seq(e)))
-            for b in touched:  # carried = the bucket's untouched entries
-                keep = [
-                    e
-                    for j, (bb, e) in enumerate(flat_entries)
-                    if bb == b and j not in touched_ids
-                ]
-                # tombstones in a clean bucket name never-present keys; they
-                # are dropped from rewritten buckets (same as merge/compact)
-                carry[b] = keep
+            for i, (b, e) in enumerate(flat_entries):
+                if i in touched_ids:
+                    plan.setdefault(b, []).append(e)
+            # carried = the touched bucket's untouched entries; tombstones in
+            # a clean bucket name never-present keys and are dropped from
+            # rewritten buckets (same as merge/compact)
+            for i, (b, e) in enumerate(flat_entries):
+                if b in plan and i not in touched_ids:
+                    carry.setdefault(b, []).append(e)
             # every dirty bucket resolves in-flight: matched-ness cannot be
             # evaluated against multi-version state, and whether a source
             # key lives there is unknowable without a job — resolving
             # unconditionally trades a rare extra fold (dirty buckets are
             # bounded by the compaction policy) for the removed job above
-            for b in files:
+            for b, entries in files.items():
                 if str(b) in dirty:
-                    touched.add(b)
-                    for e in files.get(b, []):
-                        (mor_tombs if e.get("kind") == "tomb" else mor_data).append(
-                            (e["path"], _entry_seq(e))
-                        )
+                    plan[b] = entries
+        touched = set(plan)
 
-        parts: List[DataFrame] = []
-        if rewrite_paths:
-            parts.append(lake._read_files(rewrite_paths, schema, n_buckets, meta=meta))
-        if mor_data or mor_tombs:
-            parts.append(
-                lake._resolved_files(mor_data, mor_tombs, schema, n_buckets, meta=meta)
-            )
-        if parts:
-            target = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        else:
+        target = lake._read_plan(meta, plan)
+        if target is None:
             empty = T.StructType(
                 list(schema.fields)
                 + [T.StructField(BUCKET_COL, T.LongType()), T.StructField(KHASH_COL, T.LongType())]
             )
             target = lake.spark.createDataFrame([], empty)
 
-        out, obs, action_names = self._apply_clauses(
+        out, action_counts, action_names = self._apply_clauses(
             target, src, schema, schema_cols, n_buckets, bucket_expr, khash_expr,
             defaults=lake.column_defaults(meta),
         )
 
-        rel_dir = os.path.join("data", f"c-{_uid()}")
-        out_dir = os.path.join(lake.root, rel_dir)
         # write partition count: inserts can land in ANY bucket (their
         # bucket set is unknown without a job), so size to the table's
         # bucket count — the same parallelism a full-bucket write uses
-        (
-            out.repartition(max(meta["n_buckets"], 1), F.col(BUCKET_COL))
-            .sortWithinPartitions(BUCKET_COL, KHASH_COL)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", meta.get("target_file_rows", 1_000_000))
-            .options(**_bloom_opts(meta))
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
-        )
-        counts = {k: int(v or 0) for k, v in obs.get.items()}
-        new_files = lake._new_file_stats(out_dir, rel_dir, stats_cols=meta.get("stats_cols"))
+        new_files = lake._stage(out, meta, n_buckets)
+        counts = action_counts()
 
-        read_meta = meta
-        entry_base = {
+        entry = {
             "mutation": "merge_into",
             "clauses": [
                 {"branch": b, "kind": k, "conditional": c is not None}
@@ -389,12 +335,19 @@ class MergeIntoBuilder:
             "rows_inserted": sum(
                 counts[n] for n, (b, k) in action_names.items() if k == "insert"
             ),
-            "files_rewritten": len(rewrite_paths) + len(mor_data),
+            "files_rewritten": sum(
+                e.get("kind") != "tomb" for es in plan.values() for e in es
+            ),
             # dirty-bucket tombstone files consumed by the in-flight
             # resolution — separate so rewrite-amplification audits see the
             # full file count without changing files_rewritten's meaning
             # (data files only, consistent with merge/mutate lineage)
-            "tomb_files_resolved": len(mor_tombs),
+            "tomb_files_resolved": sum(
+                e.get("kind") == "tomb"
+                for b, es in plan.items()
+                if str(b) in dirty
+                for e in es
+            ),
         }
         # manifests change for: buckets whose files were rewritten/resolved
         # (``touched`` — kept entries carried, rewritten ones replaced) and
@@ -402,6 +355,11 @@ class MergeIntoBuilder:
         # new file appended — khash-sound pruning guarantees the inserted
         # keys live in no existing file, so the bucket stays single-version)
         write_touched = sorted(touched | set(new_files))
+        carried = {
+            b: carry.get(b, []) if b in touched else files.get(b, [])
+            for b in write_touched
+        }
+
         # rebase validation must cover the full PROBE set, not just the
         # buckets we wrote: a source key that matched nothing at read time
         # touches no file, but a concurrent insert of that key means this
@@ -413,56 +371,17 @@ class MergeIntoBuilder:
         # round-4 ask that removed the unconditional distinct-buckets job).
         # A by-source MERGE probes every bucket, including ones created
         # concurrently, so its probe set is the whole layout.
-        probe_cache: Dict[str, List[int]] = {}
+        @functools.cache
+        def read_set() -> List[int]:
+            if scans_by_source:
+                probe = range(n_buckets)
+            else:
+                probe = [int(r[0]) for r in src.select(BUCKET_COL).distinct().collect()]
+            return sorted(set(write_touched) | set(probe))
 
-        def _probe_buckets() -> List[int]:
-            if "b" not in probe_cache:
-                if scans_by_source:
-                    probe_cache["b"] = list(range(n_buckets))
-                else:
-                    rows = src.select(BUCKET_COL).distinct().collect()
-                    probe_cache["b"] = [int(r[0]) for r in rows]
-            return probe_cache["b"]
-
-        def build(base: dict):
-            if base is not read_meta:
-                lake._validate_base(
-                    read_meta, base,
-                    sorted(set(write_touched) | set(_probe_buckets())),
-                    batch_id,
-                )
-            new_version = base["version"] + 1
-            entry = {**entry_base, "version": new_version}
-            if batch_id is not None:
-                entry["batch_id"] = batch_id
-            bucket_map = dict(base["buckets"])
-            d = dict(base.get("dirty", {}))
-            manifest_buckets: Dict[str, List[dict]] = {}
-            for b in write_touched:
-                if b in touched:
-                    kept = list(carry.get(b, []))
-                else:  # insert-only bucket: every existing live entry stays
-                    kept = list(files.get(b, []))
-                d.pop(str(b), None)  # rewritten/resolved buckets are clean now
-                entries = kept + [
-                    {**e, "seq": new_version} for e in new_files.get(b, [])
-                ]
-                if entries:
-                    manifest_buckets[str(b)] = entries
-                else:  # every row of the bucket was deleted
-                    bucket_map.pop(str(b), None)
-            segments: List[Tuple[str, dict]] = []
-            if manifest_buckets:
-                manifest_rel = f"metadata/m-{new_version}-{_uid()}.json"
-                for b in manifest_buckets:
-                    bucket_map[b] = manifest_rel
-                segments.append((manifest_rel, {"buckets": manifest_buckets}))
-            new_meta = lake._advance_meta(
-                base, new_version, entry, bucket_map, segments, None, batch_id, dirty=d
-            )
-            return new_meta, segments, entry
-
-        return lake._commit_loop(read_meta, build)
+        return lake._install_rewrite(
+            meta, read_set, write_touched, carried, new_files, entry, batch_id=batch_id
+        )
 
     # -- clause compilation ------------------------------------------------
 
@@ -499,8 +418,9 @@ class MergeIntoBuilder:
         defaults: Optional[Dict[str, object]] = None,
     ):
         """Compile the clause cascade into one joined projection.  Returns
-        (output rows of the rewritten buckets, Observation with per-action
-        counts, action_name -> (branch, kind))."""
+        (output rows of the rewritten buckets, a function giving the
+        per-action row counts once those rows are written, action_name ->
+        (branch, kind))."""
         from .lake import BUCKET_COL, KHASH_COL
 
         from functools import reduce
@@ -586,18 +506,29 @@ class MergeIntoBuilder:
             if deletes
             else (F.col("_action") != "drop")
         )
+        tallies = [
+            F.sum(F.when(F.col("_action") == n, 1).otherwise(0)).alias(n)
+            for n in action_names
+        ]
         obs = Observation("merge_into")
-        observed = flat.observe(
-            obs,
-            *[
-                F.sum(F.when(F.col("_action") == n, 1).otherwise(0)).alias(n)
-                for n in action_names
-            ],
-        )
         out = (
-            observed.where(keep_pred)
+            flat.observe(obs, *tallies)
+            .where(keep_pred)
             .drop("_action")
             .withColumn(BUCKET_COL, bucket_expr(n_buckets))
             .withColumn(KHASH_COL, khash_expr())
         )
-        return out, obs, action_names
+
+        def counts() -> Dict[str, int]:
+            try:
+                row = obs.get  # the write action already ran
+            except Py4JJavaError:
+                # a zero-output write (every rewritten row deleted, nothing
+                # inserted) never delivers the observed-metrics row (Spark
+                # 4.1: toPyRow asserts on the empty sink's missing metrics,
+                # as in LakeTable._mutate_once); this rare path pays a
+                # second pass
+                row = flat.agg(*tallies).collect()[0].asDict()
+            return {k: int(v or 0) for k, v in row.items()}
+
+        return out, counts, action_names

@@ -63,7 +63,7 @@ from typing import Dict, NamedTuple, Optional
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .apply import apply_batch
+from .apply import _slice_key, apply_batch
 from .lake import LakeTable
 from .wal import CORRUPT_COL, DecodedStream, decode_debezium, decode_maxwell
 
@@ -314,7 +314,7 @@ def replay_routed(
     not stability.
 
     Only OCCUPIED slices are walked: one small per-table aggregation
-    (``lsn DIV batch_lsns`` -> per-slice max) replaces the old min/max
+    (``_slice_key`` -> per-slice max) replaces the old min/max
     bounds job, and the loop iterates exactly the union of occupied slice
     keys.  Maxwell LSNs are file-packed (``fileno * 2**40 + offset``,
     cdc/wal.py::maxwell_position_lsn), so a stream spanning two binlog
@@ -357,7 +357,7 @@ def replay_routed(
         per_table: Dict[str, Dict[int, int]] = {}
         for name, df in streams.items():
             occ = (
-                df.groupBy(F.expr(f"lsn DIV {int(batch_lsns)}").alias("_k"))
+                df.groupBy(_slice_key(batch_lsns).alias("_k"))
                 .agg(F.max("lsn").alias("_mx"))
                 .collect()
             )
